@@ -1,394 +1,118 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.immutable.ListMap
 
-/** Benchmark harness (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+/** Whole-surface timing sweep: times every [[SparkEntry.benchQueries]]
+  * entry on SPARK_GRAFT_SF_DIR with [[time]] and prints ONE JSON line;
+  * `bench_full.json` gets the same line plus the next sweep's priors.
+  * The repo's benchmark of record is `perfbench/run.py`; this sweep is the
+  * per-query regression read across all queries.
   *
-  * Methodology (VERDICT r01 fixes):
-  *  - every query is executed once untimed (warm-up: session/JIT/codegen,
-  *    parquet footer cache) and then timed on a second full execution;
-  *  - the action is `write.format("noop")` — a real sink that executes the
-  *    complete physical plan (sorts and exchanges included, unlike `count()`
-  *    which lets Catalyst prune them) without filesystem cost;
-  *  - failures are reported in an `errors` map, never folded into the total.
-  *
-  * Sweep-state hygiene (VERDICT r09 #1/#2 — the late-sweep outlier class):
-  * `catalog.clearCache()` only empties the SQL cache manager. Three kinds of
-  * per-query state live OUTSIDE it and are reclaimed only by ContextCleaner
-  * — which acts on weak references, i.e. only AFTER a JVM GC, and whose own
-  * periodic-GC fallback defaults to 30 min, longer than the whole sweep:
-  *  - `localCheckpoint` RDDs (dedup clusters, BPE rounds, dangling PageRank)
-  *    hold block-manager memory until GC'd;
-  *  - broadcast blocks from every broadcast join;
-  *  - shuffle files from every exchange.
-  * With the 24 g bench heap GC can stay entirely absent for most of the
-  * sweep, so this dead state accumulates until memory pressure finally
-  * forces collection — INSIDE whichever unlucky late-sweep query is running
-  * (r8: q_fingerprint/q_mi; r9: q_pagerank/q_regression — all sustained
-  * through their median-of-3 re-times because the degraded state persisted
-  * across the back-to-back timings). The harness therefore (a) unpersists
-  * stray RDD-level persists after every query and (b) runs an explicit
-  * `System.gc()` every [[GcEvery]] queries BETWEEN timed regions, draining
-  * ContextCleaner's queue on a schedule so collection debt is paid where it
-  * isn't measured.
+  * [[time]] is the one definition of "time a query" that every in-tree
+  * harness uses (Bench, `tools.QueryProfile`, `tools.ScaleProbe`,
+  * `tools.ScalingProfile`): an untimed warm-up (JIT, codegen, parquet
+  * footer caches), then [[release]], then a timed run from plan
+  * construction to a `noop` sink, then [[release]] again. The sink is a
+  * real one: unlike `count()` it executes the complete physical plan
+  * (Catalyst cannot prune sorts and exchanges) without filesystem cost.
+  * Eager jobs a query runs while its plan is built (persist+count,
+  * localCheckpoint, driver collects) are timed because the build is.
   */
 object Bench {
 
-  /** Outlier re-time policy (VERDICT r07 #3), pure for unit testing: a
-    * first timing above 2× the same-box prior is re-timed twice more and
-    * the MEDIAN of 3 reported — machine-state outliers (page cache, JIT,
-    * GC alignment) stop masquerading as plan regressions. The query is
-    * flagged REGRESSED when even the median exceeds 2× the prior: slow on
-    * all three back-to-back timings is sustained, not noise (VERDICT r09
-    * #5). Returns (reported seconds, regressed).
-    */
-  /** A sustained excursion below this many seconds is never FLAGGED as a
-    * regression (the median-of-3 de-noise still applies): on this
-    * hardware sub-second queries jitter past 2× on scheduler noise alone
-    * (measured: q_pivot 0.20 → 0.48 s on an idle box), and a flag that
-    * cries wolf every sweep hides the 13-second real thing.
+  /** A confirmed excursion below this many seconds is never FLAGGED:
+    * sub-second queries jitter past 2× on scheduler noise alone
+    * (measured: q_pivot 0.20 → 0.48 s on an idle box).
     */
   val RegressFloorSec = 1.0
 
-  /** Heavy-query sampling floor: a query whose first timing reaches this
-    * many seconds AND has no same-box prior (new query) is re-timed twice
-    * and reported as the median of 3, with samples logged. Heavies WITH an
-    * in-band prior run ONCE (r16, VERDICT r15 #1): the unconditional
-    * median-of-3 on every ≥1 s query cost ~2×(heavy sum) ≈ 340 s of the
-    * ~900 s r15 sweep, and the driver's wall-clock budget killed the run
-    * (BENCH_r15 rc=124). Drift diagnosis is preserved by
-    * [[DriftSampleFactor]]: any heavy whose first timing moves past 1.5×
-    * its prior still draws the full 3-sample record, so the r10
-    * q_neardup_jaccard shape (1.52 → 3.23 s, under the 2× flag trigger)
-    * still carries samples; only steady in-band heavies stop paying.
+  /** Written to bench_full.json and required by [[parsePriors]]: priors
+    * timed under another protocol never gate this one (a timed run that
+    * reuses the warm-up's cached intermediates reads persist-heavy
+    * queries up to 4.2× low).
     */
-  val SampleAtSec = 1.0
+  val Protocol = "cleared"
 
-  /** A heavy (≥ [[SampleAtSec]]) first timing past this many times its
-    * prior triggers the median-of-3 even below the 2× flag trigger —
-    * the diagnosable-drift band (VERDICT r10 #2), kept while dropping
-    * the unconditional in-band heavy re-times (r16 wall-clock cut).
+  /** Drop every materialization the session holds: the SQL cache manager
+    * and every RDD-level persist (`localCheckpoint`, RDD `persist`), which
+    * `clearCache` does not cover and ContextCleaner reclaims only after a
+    * JVM GC. Blocking, so the next query starts from empty storage.
     */
-  val DriftSampleFactor = 1.5
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
 
-  def settle(prior: Option[Double], first: Double,
-             retime: () => Double): (Double, Boolean) =
-    settleSamples(prior, first, retime) match {
-      case (t, r, _) => (t, r)
+  /** (construction s, total s) of one query under the cleared protocol —
+    * see the object doc. `timedLeg` wraps only the timed run (a caller's
+    * listener or sampler); it must invoke its argument exactly once.
+    */
+  def time(spark: SparkSession, timedLeg: (() => Unit) => Unit = _())(
+      build: => DataFrame): (Double, Double) = {
+    def run(): (Double, Double) = {
+      val t0 = System.nanoTime()
+      val df = build
+      val t1 = System.nanoTime()
+      df.write.mode("overwrite").format("noop").save()
+      ((t1 - t0) / 1e9, (System.nanoTime() - t0) / 1e9)
     }
+    try {
+      run()
+      release(spark)
+      var timed = (0.0, 0.0)
+      timedLeg(() => timed = run())
+      timed
+    } finally release(spark)
+  }
 
-  /** [[settle]] plus the raw samples, so a flagged regression can log all
-    * three timings — one inflated timing among three tells a different
-    * diagnosis story (transient machine state caught by the median) than
-    * three inflated ones (degraded sweep context), and BENCH_r09's 13.1 s
-    * q_pagerank was only diagnosable because the judge knew it was a
-    * median. Re-times (median-of-3) when the first timing exceeds 2× the
-    * prior at ANY magnitude — this IS the one-rerun confirmation pass for
-    * sub-second movers the r15 verdict asked for; their samples land in
-    * bench_full.json even though the flag floor keeps them unflagged — or
-    * when a heavy (first ≥ [[SampleAtSec]]) has no usable prior or drifts
-    * past [[DriftSampleFactor]]× it. Steady in-band heavies run once
-    * (VERDICT r15 #1 wall-clock cut). The regression flag is judged on
-    * the MEDIAN either way.
+  /** The confirmation rule, pure for unit testing. A first timing more
+    * than 2× its same-box prior is re-timed once by `fresh` (the caller
+    * rebuilds the session first: host stalls live in the SparkContext
+    * layer, and a fresh context recovered q_minhash_k_sweep 10.87 →
+    * 0.55 s); the better of the two is published. It is REGRESSED iff
+    * that value is still past 2× the prior and at least
+    * [[RegressFloorSec]]: a plan regression is slow in a fresh context
+    * too. A missing or non-positive prior is never re-timed or flagged.
+    * Returns (published seconds, regressed).
     */
-  def settleSamples(prior: Option[Double], first: Double,
-                    retime: () => Double): (Double, Boolean, Seq[Double]) = {
+  def confirm(prior: Option[Double], first: Double,
+              fresh: () => Double): (Double, Boolean) = {
     val p = prior.filter(_ > 0)
-    val overPrior = p.exists(first > 2 * _)
-    val heavyDrift = first >= SampleAtSec &&
-      (p.isEmpty || p.exists(first > DriftSampleFactor * _))
-    if (overPrior || heavyDrift) {
-      val samples = Seq(first, retime(), retime())
-      val med = samples.sorted.apply(1)
-      val regressed = p.exists(med > 2 * _) && med >= RegressFloorSec
-      (med, regressed, samples)
-    } else (first, false, Seq(first))
+    if (!p.exists(first > 2 * _)) (first, false)
+    else {
+      val v = math.min(first, fresh())
+      (v, p.exists(v > 2 * _) && v >= RegressFloorSec)
+    }
   }
 
   /** A confirmed regression whose measurement exceeds this many times its
     * old prior keeps the OLD prior (the r9 shape: 13.1 s vs a 1.9 s prior
-    * = 6.9× — an all-sweep host stall must never become the baseline).
-    * Below the cap the confirmed number IS accepted as the next prior —
-    * see [[nextPriors]].
+    * = 6.9× — a stall must never become the baseline). Below the cap the
+    * confirmed number IS accepted as the next prior — see [[nextPriors]].
     */
   val PriorAcceptCap = 4.0
 
-  /** Next-round priors (VERDICT r09 #5, revised r11): a TRANSIENT outlier
-    * must not become its own baseline — but a regression that survived
-    * the end-of-sweep re-measure (fresh warm-up + 3 more samples, minutes
-    * after the mid-sweep flag) is this box's sustained number, and
-    * carrying the old prior forever makes the flag permanent when the
-    * prior came from a different (faster) machine: BENCH_r10's
-    * q_source_overlap flagged against a 0.49 s builder-box rested prior
-    * while the driver box has measured ~0.9–1.1 s for two rounds — a
-    * cross-box envelope, not a plan change. So: confirmed regressions
-    * within [[PriorAcceptCap]]× of the old prior record the confirmed
-    * measurement (one-shot flag — the next same-box sweep compares
-    * against the box's own number); beyond the cap the old prior is
-    * carried (stall protection, the flag stays armed). Everything else
-    * records the fresh measurement.
+  /** Next-sweep priors: every query records its fresh measurement, except
+    * that a confirmed regression past [[PriorAcceptCap]]× its old prior
+    * carries the old prior (stall protection, the flag stays armed).
+    * Within the cap the confirmed number is this box's sustained one
+    * (BENCH_r10's q_source_overlap: a 0.49 s prior from a faster box vs
+    * ~1.1 s sustained on the sweep's box for two rounds), so the flag is
+    * one-shot.
     */
   def nextPriors(times: Map[String, Double], priors: Map[String, Double],
-                 regressed: Set[String],
-                 degraded: Set[String] = Set.empty): Map[String, Double] =
-    times.flatMap { case (k, t) =>
-      // A degraded-tail timing is a COLD single run taken past the sweep
-      // budget (no warm-up, no re-times, usually on a contended box —
-      // ADVICE r16): it must never arm as a prior. Keep the old prior if
-      // one exists (the flag stays meaningful next sweep); a degraded
-      // query with no prior stays priorless — the next in-protocol sweep
-      // measures it fresh.
-      if (degraded(k)) priors.get(k).map(k -> _)
-      else Some(k -> (if (regressed(k)) {
+                 regressed: Set[String]): Map[String, Double] =
+    times.map { case (k, t) =>
+      k -> (if (regressed(k)) {
         val old = priors.getOrElse(k, t)
         if (t <= PriorAcceptCap * old) t else old
-      } else t))
+      } else t)
     }
 
-  /** Headline split (VERDICT r16 #1): the official artifact's single
-    * `value` mixed warm-protocol timings with degraded-tail cold runs, so
-    * a reader applying the 2× gate to a contended sweep got the wrong
-    * answer (BENCH_r16: 1035.6 s headline, of which 247 unwarmed runs;
-    * the six worst re-ran at 8.9 s vs their 464 s under the identical
-    * harness). Returns (in-protocol seconds, degraded seconds) — the 2×
-    * gate reads ONLY the first, against the in-protocol query count.
-    */
-  def splitHeadline(times: Map[String, Double],
-                    degraded: Set[String]): (Double, Double) = {
-    val (deg, in) = times.partition { case (k, _) => degraded(k) }
-    (in.values.sum, deg.values.sum)
-  }
-
-  /** In-band query count for the artifact's `n_inband` (ADVICE r17): count
-    * from the MEASURED map, not `times.size - degraded.size` — a degraded
-    * query whose timed run THREW lands in the degraded name list but never
-    * in `times`, and the subtraction undercounts (or goes negative when
-    * many degraded queries fail). The 2× gate reads value_inband/n_inband,
-    * so this count must partition exactly what value_inband sums.
-    */
-  def inbandCount(times: Map[String, Double], degraded: Set[String]): Int =
-    times.count { case (k, _) => !degraded(k) }
-
-  /** In-band stall auto-adjudication (VERDICT r17 #1): BENCH_r17 published
-    * q_image_neardup at 25.38 s inside `value_inband` (41.9× its 0.61 s
-    * rested prior) while a rerun under the identical harness read 0.98 s —
-    * the one-rerun rule the builder applied BY HAND belongs in the
-    * harness. Any in-band settled timing past [[AdjudicateFactor]]× its
-    * armed prior (and past the noise floor) triggers ONE fresh-context
-    * confirmation run: the SparkSession (and with it the SparkContext,
-    * executor pools, block manager, RPC env — the r16 latent-stall layer)
-    * is torn down and rebuilt, the query re-warmed and re-timed once. The
-    * artifact then carries the adjudicated value plus `raw_first` and a
-    * `stall_adjudicated` marker, so no unexplained >4× mover can sit in
-    * the in-band headline. [[MaxAdjudications]] bounds the wall-clock a
-    * pathological sweep can spend re-proving itself.
-    */
-  val AdjudicateFactor = 4.0
-  val MaxAdjudications = 12
-
-  def needsAdjudication(prior: Option[Double], settled: Double): Boolean =
-    prior.exists(p => p > 0 && settled > AdjudicateFactor * p) &&
-      settled >= RegressFloorSec
-
-  /** Adjudicated (value, stillRegressed): the better of the stalled
-    * settled value and the fresh-context confirmation — a genuine plan
-    * regression is still slow in a fresh context (flag stands, judged at
-    * the normal 2× rule); a stall victim recovers and the recovered
-    * number is the truth this sweep gets to publish.
-    */
-  def adjudicate(prior: Double, settled: Double,
-                 fresh: Double): (Double, Boolean) = {
-    val v = math.min(settled, fresh)
-    (v, prior > 0 && v > 2 * prior && v >= RegressFloorSec)
-  }
-
-  /** Prior-arming context gate (VERDICT r17 #2): `nextPriors` refuses
-    * degraded timings, but the r17 priors were armed from a sweep whose
-    * own probes showed contamination (32-wide 0.607→0.923 s vs the ~0.50
-    * box-class norm, steal 3.66 %) — an 8 % baseline ratchet on unchanged
-    * plans. Arming now additionally requires the sweep's probe channels
-    * at BOTH ends to sit inside tolerance of the recorded quiet-box class
-    * norms (BASELINE.md: 1-thread ≈ 0.43 s, wide ≈ 0.44–0.50 s) and the
-    * sweep steal% to be basis points, not percents. A vetoed sweep keeps
-    * the previous priors verbatim and stamps the artifact
-    * `"priors_armed":false` with the veto reason — context-elevated
-    * timings stay published (value/value_inband) but never become the
-    * baseline. Bootstrap exception: with NO existing priors there is
-    * nothing to carry, so a first sweep on a box arms regardless (its
-    * numbers are the only same-box evidence there is);
-    * SPARK_GRAFT_ARM_FORCE=1 overrides for deliberate re-baselining.
-    */
-  val Probe1TNorm = 0.43
-  val ProbeWideNorm = 0.50
-  val ArmProbeTolerance = 1.3
-  val ArmStealMaxPct = 2.0
-
-  def probesCleanForArming(probe1t: Double, probeWide: Double,
-                           stealPct: Double): Boolean =
-    probe1t <= Probe1TNorm * ArmProbeTolerance &&
-      probeWide <= ProbeWideNorm * ArmProbeTolerance &&
-      (stealPct < 0 || stealPct <= ArmStealMaxPct)
-
-  /** (priors to write, armed?) — see [[probesCleanForArming]]. */
-  def armPriors(clean: Boolean, fresh: Map[String, Double],
-                old: Map[String, Double],
-                force: Boolean = false): (Map[String, Double], Boolean) =
-    if (clean || force || old.isEmpty) (fresh, true) else (old, false)
-
-  /** Segmented sweep (VERDICT r17 #3): one global 1500 s budget made the
-    * degraded tail all-or-nothing — the instant it expired, EVERY
-    * remaining query ran cold (135/310 in r17), and one latent-stall JVM
-    * poisoned everything after it (the r16 artifact-isolation episode).
-    * The sweep now runs in segments of [[SegmentSize]] queries; each
-    * segment gets a fresh SparkSession/SparkContext (clearing the
-    * session/RPC/block-manager layer the latent mode lives in) and a
-    * proportional slice of the REMAINING budget, so a stall or overrun
-    * degrades at most its own segment's tail while later segments recover
-    * with their own slices. Unused slice rolls forward automatically
-    * (slices are computed from actual remaining budget at segment start);
-    * a fully exhausted budget still degrades everything after it, exactly
-    * as before — the mechanism bounds blast radius, it does not mint
-    * extra wall-clock.
-    */
-  val SegmentSize = 20
-
-  def segmentSlice(remainingBudget: Double, remainingQueries: Int,
-                   segmentQueries: Int): Double =
-    if (remainingQueries <= 0 || remainingBudget <= 0) 0.0
-    else remainingBudget *
-      (math.min(segmentQueries, remainingQueries).toDouble / remainingQueries)
-
-  /** (ΔGC collections, ΔGC millis) source — cumulative across all
-    * collectors; callers snapshot around a timed region. */
-  def gcTotals(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.foldLeft((0L, 0L)) { case ((c, t), b) =>
-        (c + math.max(0L, b.getCollectionCount),
-          t + math.max(0L, b.getCollectionTime))
-      }
-  }
-
-  /** Flag-time stall evidence (VERDICT r17 #4): the 42–300× in-band stall
-    * events have so far been adjudicated but never root-caused — the
-    * contention experiment refuted proportional CPU sharing, so the
-    * mechanism is either JVM-internal (GC wall, safepoint, codegen/
-    * classload storm) or host-level (PSI stall). Captured at the moment a
-    * >4× flag fires, BEFORE the fresh-context rerun tears the evidence
-    * down: /proc/pressure lines (host: some/full stall shares), GC
-    * collector totals plus the flagged query's own ΔGC (JVM: a
-    * multi-second collection wall shows up here), a thread-state
-    * histogram and the top frame of up to 8 RUNNABLE/BLOCKED worker
-    * threads (the r16 NettyRpcEnv.FileDownloadChannel signature was
-    * exactly such a frame). One compact line per flag, stored under
-    * `stall_evidence` in bench_full.json.
-    */
-  def stallEvidence(gcAtQueryStart: (Long, Long)): String = {
-    def psi(kind: String): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/proc/pressure/$kind")), "UTF-8")
-        .trim.replace('\n', ';').replaceAll("\\s+", " ")
-      catch { case _: Throwable => "n/a" }
-    val (gc0c, gc0t) = gcAtQueryStart
-    val (gc1c, gc1t) = gcTotals()
-    val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-    val infos = tmx.getThreadInfo(tmx.getAllThreadIds, 4)
-      .filter(_ != null).toSeq
-    val hist = infos.groupBy(_.getThreadState.toString).toSeq.sortBy(_._1)
-      .map { case (s, a) => s"$s=${a.size}" }.mkString(",")
-    val hot = infos
-      .filter(i => i.getThreadState == Thread.State.RUNNABLE ||
-        i.getThreadState == Thread.State.BLOCKED)
-      .filter(_.getStackTrace.nonEmpty)
-      .filterNot(_.getThreadName.startsWith("main"))
-      .take(8)
-      .map { i =>
-        val f = i.getStackTrace.head
-        s"${i.getThreadName}@${f.getClassName}.${f.getMethodName}"
-      }.mkString("|")
-    s"psi_cpu=${psi("cpu")} psi_io=${psi("io")} psi_mem=${psi("memory")} " +
-      s"gc_run=${gc1c - gc0c}/${gc1t - gc0t}ms gc_total=$gc1c/${gc1t}ms " +
-      s"threads=$hist" + (if (hot.nonEmpty) s" hot=$hot" else "")
-  }
-
-  // CPU probe DCE sink — the JIT must not elide the probe loop
-  @volatile private var probeSink = 0L
-
-  /** Fixed single-thread CPU probe (VERDICT r10 #3): a sequential
-    * xorshift-mix loop whose wall-clock tracks effective single-core
-    * speed. Run BEFORE and AFTER the sweep and recorded in the bench
-    * JSON line, so a throttle-inflated sweep carries its own in-band
-    * evidence: the triage work measured this box running ~20–25 % slower
-    * immediately after sustained 32-thread load (BASELINE.md round-10
-    * notes) — `probe_after / probe_before ≳ 1.2` says "the box, not the
-    * plan". Sequential dependency defeats vectorization; median of 3
-    * after a JIT warm pass defeats compilation noise.
-    */
-  def cpuProbe(): Double = {
-    def once(n: Int): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < n) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        x ^= (x >>> 33)
-        i += 1
-      }
-      probeSink += x
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(20000000) // JIT warm
-    Seq(once(200000000), once(200000000), once(200000000)).sorted.apply(1)
-  }
-
-  /** Probe thread width: the sweep's own parallelism (local[32] ⇒ 32),
-    * capped by the hardware — a wider probe than cores would inflate on a
-    * QUIET box and tell nothing.
-    */
-  def probeWidth: Int =
-    math.min(32, Runtime.getRuntime.availableProcessors)
-
-  /** N-thread CPU probe (VERDICT r11 #1): the r11 sweep's 1-thread probe
-    * read 0.94 ("box fine") while 0.55 s queries drew 43–64 s samples —
-    * a box can be saturated at 32-wide parallelism yet give one probe
-    * thread a full core. This probe runs the SAME fixed sequential loop
-    * on [[probeWidth]] threads simultaneously and reports the wall-clock
-    * until ALL finish: on a quiet ≥N-core box that equals the 1-thread
-    * time; external load that steals cores from a 32-wide sweep inflates
-    * it proportionally. Median of 3 (threads re-created per trial; the
-    * loop is already JIT-warm from [[cpuProbe]], which callers run
-    * first).
-    */
-  def cpuProbeWide(threads: Int = probeWidth): Double = {
-    def trial(): Double = {
-      val sinks = new java.util.concurrent.atomic.AtomicLong(0L)
-      val ts = (0 until threads).map { t =>
-        new Thread(() => {
-          var x = 0x9E3779B97F4A7C15L + t
-          var i = 0
-          while (i < 200000000) {
-            x = x * 6364136223846793005L + 1442695040888963407L
-            x ^= (x >>> 33)
-            i += 1
-          }
-          sinks.addAndGet(x)
-          ()
-        })
-      }
-      val t0 = System.nanoTime()
-      ts.foreach(_.start())
-      ts.foreach(_.join())
-      probeSink += sinks.get()
-      (System.nanoTime() - t0) / 1e9
-    }
-    Seq(trial(), trial(), trial()).sorted.apply(1)
-  }
-
-  /** 1-minute load average from /proc/loadavg — sampled at sweep start,
-    * sweep end, and at every REGRESSED flag, so a contended sweep's
-    * record carries the host's own story (r11: the flags' samples said
-    * "box", the probe said "fine", and nothing in-band settled it).
-    * Returns -1 when unreadable (non-Linux).
+  /** 1-minute load average from /proc/loadavg, recorded at sweep start
+    * and end as host context. Returns -1 when unreadable (non-Linux).
     */
   def loadAvg1m(): Double =
     try new String(java.nio.file.Files.readAllBytes(
@@ -408,110 +132,41 @@ object Bench {
       (if (f.length > 7) f(7) else 0L, f.sum)
     } catch { case _: Throwable => (-1L, -1L) }
 
-  /** Parse same-box priors from a bench_full.json text: the `"priors"`
-    * object when present (carry-forward aware, written since r10), else
-    * any query-keyed numbers in the text (r9-era files, where the only
-    * map was `"queries"`). A prior recorded at a DIFFERENT scale factor
-    * is discarded — comparing an sf0.1 timing against an sf0.001 prior
-    * would flag every query as a 2× outlier and triple the whole sweep.
-    * A prior recorded at a different CORE COUNT — or one with no
-    * recorded `"priors_cpus"` at all (pre-r19 files, whose width is
-    * unverifiable) — is discarded the same way (VERDICT r18 #3: the
-    * driver's 8-core scaling sweep re-armed 8-core priors that the next
-    * 32-core sweep would have re-timed against).
+  /** Parse same-box priors from a bench_full.json text's `"priors"`
+    * object. A file is discarded unless it was recorded at the same
+    * scale factor (an sf0.001 prior would flag every sf0.1 query), at
+    * the same core count (`"priors_cpus"`; an 8-core scaling sweep must
+    * not arm a 32-core baseline) and under the same [[Protocol]];
+    * untagged files are unverifiable and discarded the same way.
     */
   def parsePriors(txt: String, sfDir: String, cpus: Int): Map[String, Double] = {
     val sameSf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
       .exists(_.group(1) == sfDir)
     val sameCpus = "\"priors_cpus\":(\\d+)".r.findFirstMatchIn(txt)
       .exists(_.group(1).toInt == cpus)
-    if (!sameSf || !sameCpus) Map.empty
-    else {
-      val scope = "\"priors\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse(txt)
-      "\"((?:q_|wc_)\\w+)\":([0-9.]+)".r.findAllMatchIn(scope)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val sameProtocol = "\"protocol\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
+      .exists(_.group(1) == Protocol)
+    val scope = "\"priors\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
+      .filter(_ => sameSf && sameCpus && sameProtocol)
+    scope.fold(Map.empty[String, Double]) { m =>
+      "\"((?:q_|wc_)\\w+)\":([0-9.]+)".r.findAllMatchIn(m.group(1))
+        .map(q => q.group(1) -> q.group(2).toDouble).toMap
     }
   }
-
-  /** Between-query GC cadence — see the class doc. ~6 collections across a
-    * 103-query sweep: enough to keep dead broadcast/checkpoint/shuffle
-    * state from compounding, rare enough to cost seconds-total at most.
-    */
-  val GcEvery = 16
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     var spark = Sessions.local("graft-bench")
-    // fresh-context lever shared by the per-segment restarts and the
-    // stall adjudications: tears down the SparkContext (executor pools,
-    // block manager, RPC env, codegen classloaders) and rebuilds it —
-    // the layer every latent-stall episode so far has lived in
-    var restarts = 0
-    def restartSession(why: String): Unit = {
-      val t0 = System.nanoTime()
-      spark.stop()
-      spark = Sessions.local("graft-bench")
-      restarts += 1
-      System.err.println(
-        f"[bench] fresh SparkSession ($why) in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    def runOnce(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    def timeQuery(name: String): Double =
+      time(spark)(SparkEntry.queries(name)(spark, sfDir))._2
 
     // the sweep's core count, recorded with the priors it writes and
-    // required to match on the priors it reads (VERDICT r18 #3)
+    // required to match on the priors it reads
     val benchCpus = spark.sparkContext.defaultParallelism
     val prior: Map[String, Double] = try {
       parsePriors(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("bench_full.json")), "UTF-8"), sfDir, benchCpus)
     } catch { case _: Throwable => Map.empty }
-
-    // Opt-in randomized query order (VERDICT r09 #4): the r8/r9 outliers
-    // were all late-sweep — a seeded shuffle makes order-dependent
-    // inflation measurable (two sweeps, different seeds, diff per-query)
-    // instead of folklore. Unset → stable alphabetical order.
-    val seed = sys.env.get("SPARK_GRAFT_BENCH_SEED").map(_.trim.toLong)
-    // Opt-in subset (diagnosis only, unset for the gated sweep): a
-    // comma-separated allowlist so a single slow query can be profiled
-    // under the exact harness protocol (warm-up + timed noop sink +
-    // cleanup) without paying the other 100 queries' wall-clock.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_BENCH_TIER=rep: the documented representative tier
-    // (SparkEntry.repTier — heavies + watch-list + family reps) for
-    // mid-round iteration sweeps. Unset → the FULL surface; round-close
-    // and driver sweeps stay full (BASELINE.md policy).
-    val tier = sys.env.get("SPARK_GRAFT_BENCH_TIER")
-    val all = (only, tier) match {
-      case (Some(sel), t) =>
-        // ADVICE r15: ONLY + TIER set together used to silently ignore the
-        // tier — an operator expecting the rep tier got the ONLY subset
-        // with no warning. Reject the ambiguous combination outright.
-        require(t.isEmpty,
-          "SPARK_GRAFT_BENCH_ONLY and SPARK_GRAFT_BENCH_TIER are mutually " +
-            "exclusive: unset one (ONLY is a diagnosis allowlist, TIER a " +
-            "named subset)")
-        val missing = sel -- SparkEntry.benchQueries.toSet
-        require(missing.isEmpty, s"unknown bench queries: ${missing.mkString(",")}")
-        System.err.println(s"[bench] SUBSET of ${sel.size} queries (diagnosis mode)")
-        SparkEntry.benchQueries.filter(sel)
-      case (None, Some("rep")) =>
-        System.err.println(
-          s"[bench] representative tier: ${SparkEntry.repTier.size} queries")
-        SparkEntry.benchQueries.filter(SparkEntry.repTier.toSet)
-      case (None, Some(other)) =>
-        throw new IllegalArgumentException(s"unknown bench tier: $other")
-      case (None, None) => SparkEntry.benchQueries
-    }
-    val names = seed match {
-      case Some(s) =>
-        System.err.println(s"[bench] randomized query order, seed=$s")
-        new scala.util.Random(s).shuffle(all)
-      case None => all
-    }
 
     def jstr(s: String): String =
       "\"" + s.flatMap {
@@ -526,220 +181,35 @@ object Bench {
     var times = ListMap.empty[String, Double]
     var errors = ListMap.empty[String, String]
     var regressed = List.empty[String]
-    var samplesLog = ListMap.empty[String, Seq[Double]]
-    var ran = 0
-    def timedRun(name: String): Double = {
-      val t0 = System.nanoTime()
-      runOnce(name)
-      (System.nanoTime() - t0) / 1e9
-    }
-    def stateLine: String = {
-      val rt = Runtime.getRuntime
-      s"heap ${(rt.totalMemory - rt.freeMemory) / 1048576}/" +
-        s"${rt.totalMemory / 1048576} MB, " +
-        s"${spark.sparkContext.getPersistentRDDs.size} persistent RDDs"
-    }
-    def cleanup(): Unit = {
-      // operators that persist() for intra-query branch reuse leave
-      // cache entries behind (caller-managed lifetime — see Dedup /
-      // Similarity scaladocs); clear AFTER the timed run — in finally,
-      // so a FAILED query's partial caches don't leak into every
-      // later query's memory — while the timed run still reuses the
-      // warm-up's cache (unchanged per-query semantics).
-      spark.catalog.clearCache()
-      // ...and clearCache only covers the SQL cache manager:
-      // localCheckpoint RDDs are RDD-level persists that otherwise sit
-      // in block-manager memory until ContextCleaner gets a GC (class
-      // doc) — release them explicitly, blocking so the next query
-      // starts from a deterministic storage state
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      ran += 1
-      if (ran % GcEvery == 0) System.gc() // between timed regions
-    }
-    val probeBefore = cpuProbe()
-    val probeWideBefore = cpuProbeWide()
+    // (first, fresh) of every re-timed query: the evidence behind each
+    // published confirmation
+    var confirmed = ListMap.empty[String, (Double, Double)]
     val loadBefore = loadAvg1m()
     val jiffiesBefore = cpuJiffies()
-    var loadAtFlag = ListMap.empty[String, Double]
-    System.err.println(f"[bench] cpu probe before sweep: $probeBefore%.3f s " +
-      f"(${probeWidth}-wide: $probeWideBefore%.3f s, load $loadBefore%.2f)")
-    // Wall-clock budget backstop (VERDICT r15 #1: the driver killed the
-    // r15 sweep at its own timeout, leaving the round's official artifact
-    // dark). Once the sweep's elapsed time crosses the budget, remaining
-    // queries degrade to a single timed run with NO warm-up and NO
-    // re-times — noisier tail numbers, but the sweep always completes and
-    // the line always prints. The JSON records how many queries ran
-    // degraded so the reader can discount their numbers.
-    val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
-      .map(_.trim.toDouble).getOrElse(1500.0)
-    val sweepStart = System.nanoTime()
-    def sweepElapsed: Double = (System.nanoTime() - sweepStart) / 1e9
-    // Degraded-tail record (VERDICT r16 #1 + ADVICE r16): every query that
-    // ran past the budget is NAMED (the per-query protocol marker — a
-    // query is in-protocol iff absent from this list), and each carries
-    // the 1-min loadavg and the /proc/stat steal%% measured ACROSS ITS OWN
-    // RUN, so a contended tail is diagnosable per query, not just in
-    // aggregate.
-    var degradedNames = List.empty[String]
-    var loadAtDegraded = ListMap.empty[String, Double]
-    var stealAtDegraded = ListMap.empty[String, Double]
-    // Incremental partial record (VERDICT r15 #1): a killed sweep used to
-    // leave nothing parsable. A short running-total line goes to stderr
-    // every [[PartialEvery]] queries (stdout keeps the one-line contract),
-    // and bench_partial.json carries the full running per-query map.
-    val PartialEvery = 25
-    def partialLine: String =
-      s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"partial":true,"failed":${errors.size},"sf":"$sfDir"}"""
-    def writePartial(): Unit =
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_partial.json"),
-        (s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"partial":true,"queries":${jmap(times)},"failed":${errors.size},"sf":"$sfDir"}""" + "\n")
-          .getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    // Stall-adjudication record (VERDICT r17 #1) + flag-time evidence
-    // (VERDICT r17 #4): names in adjudication order, the raw stalled
-    // settled value each replaced, and the flag-moment JVM/host digest.
-    var adjudicatedNames = List.empty[String]
-    var rawFirst = ListMap.empty[String, Double]
-    var stallEv = ListMap.empty[String, String]
-    // Segmented sweep (VERDICT r17 #3) — see [[SegmentSize]]: each
-    // segment gets a fresh SparkSession and a proportional slice of the
-    // remaining budget; overruns degrade only the segment's own tail.
-    val segments = names.grouped(SegmentSize).toList
-    var queriesDone = 0
-    segments.zipWithIndex.foreach { case (segment, segIdx) =>
-      if (segIdx > 0) restartSession(s"segment ${segIdx + 1}/${segments.size}")
-      val slice = segmentSlice(budgetSec - sweepElapsed,
-        names.size - queriesDone, segment.size)
-      val segStart = System.nanoTime()
-      def segElapsed: Double = (System.nanoTime() - segStart) / 1e9
-      segment.foreach { name =>
-        queriesDone += 1
-        try {
-          val degraded = segElapsed > slice
-          if (degraded) degradedNames ::= name
-          if (!degraded) runOnce(name) // warm-up, untimed
-          val gc0 = gcTotals()
-          var (t, isRegressed, samples) =
-            if (degraded) {
-              val j0 = cpuJiffies()
-              val td = timedRun(name)
-              val j1 = cpuJiffies()
-              loadAtDegraded += name -> loadAvg1m()
-              stealAtDegraded += name ->
-                (if (j0._2 >= 0 && j1._2 > j0._2)
-                   100.0 * (j1._1 - j0._1) / (j1._2 - j0._2)
-                 else -1.0)
-              (td, false, Seq.empty[Double])
-            } else settleSamples(prior.get(name), timedRun(name), () => timedRun(name))
-          // In-band auto-adjudication (VERDICT r17 #1): a settled value
-          // past 4× its armed prior gets ONE fresh-context confirmation —
-          // evidence captured first, then session teardown, re-warm, one
-          // timed run; the better number is published with the marker.
-          if (!degraded && needsAdjudication(prior.get(name), t) &&
-              adjudicatedNames.size < MaxAdjudications) {
-            stallEv += name -> stallEvidence(gc0)
-            System.err.println(f"[bench] $name in-band ${t}%.2f s > " +
-              f"${AdjudicateFactor}%.0fx prior ${prior(name)}%.2f s — " +
-              s"adjudicating in a fresh context; ${stallEv(name)}")
-            restartSession(s"adjudicate $name")
-            try {
-              runOnce(name) // fresh warm-up
-              val fresh = timedRun(name)
-              val (v, still) = adjudicate(prior(name), t, fresh)
-              rawFirst += name -> t
-              adjudicatedNames ::= name
-              samples = samples :+ fresh
-              System.err.println(f"[bench] $name adjudicated: fresh-context " +
-                f"$fresh%.2f s vs stalled $t%.2f s → published $v%.2f s" +
-                (if (still) " (STILL regressed — plan, not stall)" else ""))
-              t = v
-              isRegressed = still
-            } catch {
-              case e: Throwable => // keep the settled record; marker absent
-                System.err.println(
-                  s"[bench] $name adjudication failed: ${e.getMessage}")
-            }
-          }
-          if (samples.size > 1) samplesLog += name -> samples
-          if (isRegressed) {
-            regressed ::= name
-            loadAtFlag += name -> loadAvg1m()
-            System.err.println(f"[bench] $name REGRESSED: median $t%.2f s vs " +
-              f"prior ${prior(name)}%.2f s; samples " +
-              samples.map(s => f"$s%.2f").mkString("[", ", ", "]") +
-              f"; load ${loadAtFlag(name)}%.2f; $stateLine")
-          }
-          times += name -> t
-          if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
-            System.err.println(f"[trace] $name%-22s $t%7.2f s  $stateLine")
-        } catch {
-          case e: Throwable =>
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        } finally {
-          cleanup()
-          writePartial()
-          if (ran % PartialEvery == 0) System.err.println(partialLine)
+    SparkEntry.benchQueries.foreach { name =>
+      try {
+        val first = timeQuery(name)
+        val (t, isRegressed) = confirm(prior.get(name), first, () => {
+          spark.stop()
+          spark = Sessions.local("graft-bench")
+          val fresh = timeQuery(name)
+          confirmed += name -> ((first, fresh))
+          System.err.println(f"[bench] $name re-timed in a fresh session: " +
+            f"first $first%.2f s, fresh $fresh%.2f s, prior ${prior(name)}%.2f s")
+          fresh
+        })
+        if (isRegressed) {
+          regressed ::= name
+          System.err.println(
+            f"[bench] $name REGRESSED: $t%.2f s vs prior ${prior(name)}%.2f s")
         }
+        times += name -> t
+      } catch {
+        case e: Throwable =>
+          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
     }
-    // End-of-sweep retry for confirmed regressions (r10): the median-of-3
-    // defeats SHORT machine-state excursions, but a multi-second host
-    // stall spans all three back-to-back samples and confirms a false
-    // regression (measured on this box: q_knn_lsh 8.9 s sustained
-    // median in one sweep, 1.7 s on the identical-seed next run; the
-    // r9 driver's 13.1 s q_pagerank median fits the same shape). A real
-    // plan regression is still slow minutes later; a stall victim is
-    // not — so each flagged query gets ONE re-measurement at the end of
-    // the sweep, and the better (still median-settled) result wins.
-    // adjudicated flags already carried their fresh-context confirmation
-    // mid-sweep — a second end-of-sweep pass would just re-spend budget
-    regressed.reverse.filterNot(adjudicatedNames.toSet).foreach { name =>
-      try {
-        // budget backstop applies here too: past the budget the mid-sweep
-        // record stands (the flag stays armed — stall protection)
-        if (sweepElapsed > budgetSec)
-          throw new RuntimeException("bench budget exhausted")
-        runOnce(name) // re-warm
-        val (t2, still, samples2) =
-          settleSamples(prior.get(name), timedRun(name), () => timedRun(name))
-        samplesLog += name -> (samplesLog.getOrElse(name, Seq.empty) ++ samples2)
-        val midSweep = times(name)
-        if (t2 < midSweep) times += name -> t2
-        if (!still) {
-          regressed = regressed.filterNot(_ == name)
-          System.err.println(f"[bench] $name recovered at end of sweep: " +
-            f"$t2%.2f s (was $midSweep%.2f s mid-sweep) — " +
-            "transient stall, not a regression; samples " +
-            samples2.map(s => f"$s%.2f").mkString("[", ", ", "]"))
-        } else {
-          loadAtFlag += name -> loadAvg1m()
-          System.err.println(f"[bench] $name still regressed at end of " +
-            f"sweep: $t2%.2f s; samples " +
-            samples2.map(s => f"$s%.2f").mkString("[", ", ", "]") +
-            f"; load ${loadAtFlag(name)}%.2f")
-        }
-      } catch { case _: Throwable => () } // keep the mid-sweep record
-      finally cleanup()
-    }
-    val regressedJson =
-      (if (regressed.isEmpty) ""
-       else s""","regressed":${regressed.reverse.map(jstr).mkString("[", ",", "]")}""") +
-        (if (degradedNames.isEmpty) ""
-         else s""","degraded_tail":${degradedNames.size}""") +
-        (if (adjudicatedNames.isEmpty) ""
-         else s""","adjudicated":${adjudicatedNames.size}""")
-    val seedJson = seed.map(s => s""","seed":$s""").getOrElse("")
-    // post-sweep probes: ran after every timed region (including the
-    // end-of-sweep re-measures), so probe_after/probe_before (1-thread)
-    // and probe_wide_* (32-wide, VERDICT r11 #1 — the 1-thread probe
-    // exonerated a box whose 32-wide sweep was starved) are the in-band
-    // contention evidence for THIS sweep's numbers, alongside Δsteal
-    // from /proc/stat and the 1-min loadavg pair.
-    val probeAfter = cpuProbe()
-    val probeWideAfter = cpuProbeWide()
     val loadAfter = loadAvg1m()
     val jiffiesAfter = cpuJiffies()
     val stealPct =
@@ -747,142 +217,30 @@ object Bench {
         100.0 * (jiffiesAfter._1 - jiffiesBefore._1) /
           (jiffiesAfter._2 - jiffiesBefore._2)
       else -1.0
-    System.err.println(f"[bench] cpu probe after sweep: $probeAfter%.3f s " +
-      f"(before: $probeBefore%.3f s, ratio ${probeAfter / probeBefore}%.2f); " +
-      f"${probeWidth}-wide $probeWideAfter%.3f s " +
-      f"(before: $probeWideBefore%.3f s); load $loadBefore%.2f → " +
-      f"$loadAfter%.2f; steal $stealPct%.2f%%")
-    val probeJson =
-      s""","probe_before":${fmt(probeBefore)},"probe_after":${fmt(probeAfter)}""" +
-        s""","probe_wide_before":${fmt(probeWideBefore)}""" +
-        s""","probe_wide_after":${fmt(probeWideAfter)}""" +
-        s""","load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)}""" +
-        s""","steal_pct":${fmt(stealPct)}"""
-    // Self-adjudicating headline (VERDICT r16 #1): `value` stays the
-    // all-query total (backward-compatible), but the 2x gate is computed
-    // from value_inband / n_inband ALONE — warm-protocol timings only;
-    // value_degraded carries the budget-backstop cold tail separately.
-    // BASELINE.md ("how to read the bench artifact") states this read.
-    val degradedSet = degradedNames.toSet
-    val (valInband, valDegraded) = splitHeadline(times, degradedSet)
-    val inbandJson =
-      if (degradedNames.isEmpty) ""
-      else s""","value_inband":${fmt(valInband)},"n_inband":${inbandCount(times, degradedSet)},"value_degraded":${fmt(valDegraded)}"""
-    def line(ts: Map[String, Double], omitted: Int,
-             maxErrors: Int = Int.MaxValue, errLen: Int = 200,
-             extra: String = ""): String = {
-      val es = errors.take(maxErrors)
-        .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(errLen))}" }
-        .mkString("{", ",", "}")
-      val eo = if (errors.size > maxErrors)
-        s""","errors_omitted":${errors.size - maxErrors}""" else ""
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(times.values.sum)}$inbandJson,"unit":"sec","n_queries":${times.size},"queries":${jmap(ts)}$om,"errors":$es$eo,"failed":${errors.size}$regressedJson$seedJson$probeJson$extra,"sf":"$sfDir"}"""
-    }
-    // The harness that invokes this keeps only the last ~2000 characters of
-    // stdout, and sbt appends a "[success] Total time..." trailer after us —
-    // a JSON line longer than ~1800 chars gets its head truncated and never
-    // parses. Full per-query detail always goes to bench_full.json; the
-    // printed line degrades to the slowest-K queries if the full map would
-    // overflow that window ("value" stays the all-query total either way).
-    val fullLine = line(times, 0)
+
+    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      .mkString("{", ",", "}")
+    val regressedJson =
+      if (regressed.isEmpty) ""
+      else s""","regressed":${regressed.reverse.map(jstr).mkString("[", ",", "]")}"""
+    val line =
+      s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"queries":${jmap(times)},"errors":$es,"failed":${errors.size}$regressedJson""" +
+        s""","load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"steal_pct":${fmt(stealPct)},"sf":"$sfDir"}"""
     try {
-      // the FILE additionally carries next-round priors ("queries" stays
-      // the measured truth; "priors" is what the next sweep compares to —
-      // identical except regressed queries keep their old prior). A
-      // diagnosis-subset run must never replace the full sweep's priors.
-      // the FILE also carries the raw re-time samples of every query that
-      // was sampled (>2 s or >2× prior) — the post-hoc diagnosis record
-      // VERDICT r10 #2 asked for (a lone recorded number can't distinguish
-      // "one bad sample among three" from "three sustained bad samples")
-      val samplesJson =
-        if (samplesLog.isEmpty) ""
-        else s""","samples":${samplesLog.map { case (k, v) =>
-          s"${jstr(k)}:${v.map(fmt).mkString("[", ",", "]")}"
-        }.mkString("{", ",", "}")}"""
-      // per-flag 1-min loadavg, captured the moment each flag fired
-      // (VERDICT r11 #1) — pairs with `samples` to say whether the box
-      // was loaded WHILE the bad samples were drawn
-      val loadFlagJson =
-        if (loadAtFlag.isEmpty) ""
-        else s""","load_at_flag":${jmap(loadAtFlag)}"""
-      // the per-query protocol marker + per-query host evidence for the
-      // degraded tail (VERDICT r16 #1 / ADVICE r16): names, 1-min load,
-      // and own-run steal%% — so every cold number in "queries" is
-      // individually attributable to host state, not sweep order
-      val degradedJson =
-        if (degradedNames.isEmpty) ""
-        else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}""" +
-          s""","load_at_degraded":${jmap(loadAtDegraded)}""" +
-          s""","steal_at_degraded":${jmap(stealAtDegraded)}"""
-      // the adjudication record (VERDICT r17 #1): which in-band entries
-      // were auto-confirmed in a fresh context, the raw stalled value
-      // each replaced, and the flag-moment JVM/host evidence (#4)
-      val adjJson =
-        if (adjudicatedNames.isEmpty) ""
-        else s""","stall_adjudicated":${adjudicatedNames.reverse.map(jstr).mkString("[", ",", "]")},"raw_first":${jmap(rawFirst)}"""
-      val evJson =
-        if (stallEv.isEmpty) ""
-        else s""","stall_evidence":${stallEv.map { case (k, v) =>
-          s"${jstr(k)}:${jstr(v.take(700))}"
-        }.mkString("{", ",", "}")}"""
-      val segJson = s""","segments":${segments.size},"session_restarts":$restarts"""
-      // prior-arming context gate (VERDICT r17 #2): elevated-context
-      // sweeps publish their numbers but never arm them as the baseline
-      val freshPriors = nextPriors(times, prior, regressed.toSet, degradedSet)
-      val armClean = probesCleanForArming(probeBefore, probeWideBefore, -1.0) &&
-        probesCleanForArming(probeAfter, probeWideAfter, stealPct)
-      val (priorsOut, armed) = armPriors(armClean, freshPriors, prior,
-        force = sys.env.get("SPARK_GRAFT_ARM_FORCE").contains("1"))
-      if (!armed && only.isEmpty && tier.isEmpty) System.err.println(
-        f"[bench] priors NOT armed — probe context outside quiet-box norms " +
-          f"(1t $probeBefore%.3f→$probeAfter%.3f s vs ≤${Probe1TNorm * ArmProbeTolerance}%.3f, " +
-          f"wide $probeWideBefore%.3f→$probeWideAfter%.3f s vs ≤${ProbeWideNorm * ArmProbeTolerance}%.3f, " +
-          f"steal $stealPct%.2f%% vs ≤$ArmStealMaxPct%.1f); previous priors carried")
-      val armJson = s""","priors_armed":$armed""" +
-        (if (armed) ""
-         else s""","arming_veto":${jstr(
-           f"context-elevated, not armed: probes 1t $probeBefore%.3f->$probeAfter%.3f wide " +
-             f"$probeWideBefore%.3f->$probeWideAfter%.3f steal $stealPct%.2f%% vs norms " +
-             f"1t<=${Probe1TNorm * ArmProbeTolerance}%.3f wide<=${ProbeWideNorm * ArmProbeTolerance}%.3f " +
-             f"steal<=$ArmStealMaxPct%.1f; previous priors carried")}""")
-      // tier sweeps are subsets too: letting one write bench_full.json
-      // would replace the full surface's 300+ armed priors with the
-      // tier's 68 — only a FULL sweep may re-arm
-      if (only.isEmpty && tier.isEmpty) java.nio.file.Files.write(
+      // the file additionally carries what the next sweep compares to
+      // ("queries" stays the measured truth) and the re-time evidence
+      val confirmedJson =
+        if (confirmed.isEmpty) ""
+        else s""","confirmed":${confirmed.map { case (k, (a, b)) =>
+          s"${jstr(k)}:[${fmt(a)},${fmt(b)}]" }.mkString("{", ",", "}")}"""
+      val priors = nextPriors(times, prior, regressed.toSet)
+      java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
-        (line(times, 0, extra =
-          s""","priors":${jmap(priorsOut)},"priors_cpus":$benchCpus$armJson$segJson$adjJson$evJson$samplesJson$loadFlagJson$degradedJson""")
-          + "\n").getBytes("UTF-8"))
-      // a completed sweep must not leave a stale partial behind to shadow
-      // the final artifact (ADVICE r16)
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get("bench_partial.json"))
+        (line.dropRight(1) +
+          s""","priors":${jmap(priors)},"priors_cpus":$benchCpus,"protocol":"$Protocol"$confirmedJson}""" +
+          "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // best-effort; the stdout line is the contract
-    val MaxLine = 1700
-    val printed =
-      if (fullLine.length <= MaxLine) fullLine
-      else {
-        val bySlow = times.toSeq.sortBy(-_._2)
-        // shrink the error payload first (failure runs can overflow on
-        // errors alone), then keep the slowest k queries that still fit
-        var k = bySlow.length
-        var cand = line(times, 0, maxErrors = 5, errLen = 80)
-        while (cand.length > MaxLine && k > 0) {
-          k -= 1
-          cand = line(ListMap(bySlow.take(k).sortBy(_._1): _*),
-            times.size - k, maxErrors = 5, errLen = 80)
-        }
-        // k can bottom out at 0 with the line still too long (fixed
-        // overhead + 5 truncated errors alone can exceed the window —
-        // ADVICE r07): degrade to a minimal line that always fits, so
-        // the printed contract line never gets head-truncated into
-        // unparseable JSON
-        if (cand.length > MaxLine)
-          cand = line(ListMap.empty, times.size, maxErrors = 1, errLen = 40)
-        cand
-      }
-    println(printed)
+    println(line)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -18,12 +18,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // several operators persist() intermediate relations for intra-query
-      // branch reuse (Dedup, Similarity — see their scaladocs); their
-      // lifetime contract is "until the caller clears", and this harness
-      // is the caller: drop them so a 60+-query sweep doesn't accumulate
-      // every query's cache (ADVICE r04).
-      spark.catalog.clearCache()
+      // several operators persist() or localCheckpoint intermediate
+      // relations for intra-query branch reuse (Dedup, Similarity, Graph —
+      // see their scaladocs); their lifetime contract is "until the caller
+      // clears", and this harness is the caller: drop them so a 300-query
+      // sweep doesn't accumulate every query's cache.
+      Bench.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

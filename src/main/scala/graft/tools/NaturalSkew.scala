@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Natural-key skew audit (VERDICT r15 #7): the AqeSkewJoinSpec gate and
-  * SkewProfile prove the AQE skew-join split fires on PLANTED skew — this
+/** Natural-key skew audit (VERDICT r15 #7): the AqeSkewJoinSpec gate
+  * proves the AQE skew-join split fires on PLANTED skew — this
   * tool asks whether any of the gated surface's REAL join keys actually
   * trips the detector at fixture scale and at a replicated 10×.
   *

@@ -1,17 +1,17 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.collection.mutable
 
 /** Per-stage profile of named gated queries under the Bench protocol
-  * (warm-up run, then a timed `noop` sink): for every stage of the timed
-  * run prints task count, executor run/CPU time, shuffle read/write bytes,
-  * spill, and GC — the guide-§1 "where is the time actually going" read
-  * (Stages tab + task metrics) for a UI-less box. Diagnosis tool, not
-  * gated surface.
+  * ([[graft.Bench.time]]): for every stage of the timed run prints task
+  * count, executor run/CPU time, shuffle read/write bytes, spill, and
+  * GC — the guide-§1 "where is the time actually going" read (Stages
+  * tab + task metrics) for a UI-less box. Diagnosis tool, not gated
+  * surface.
   *
-  * Usage: runMain graft.tools.QueryProfile <sfDir> q_a[,q_b,...] [--cold]
+  * Usage: runMain graft.tools.QueryProfile <sfDir> q_a[,q_b,...] [--sample]
   */
 object QueryProfile {
 
@@ -25,7 +25,6 @@ object QueryProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(',').toSeq)
       .getOrElse(sys.error("usage: QueryProfile <sfDir> q_a[,q_b,...]"))
-    val cold = args.contains("--cold")
     val spark = Sessions.local("graft-profile")
 
     val rows = mutable.ArrayBuffer.empty[StageRow]
@@ -92,25 +91,19 @@ object QueryProfile {
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n (see SparkEntry.queries)"))
-      var constructSec = 0.0 // lambda invocation: plan build + any eager
-                             // driver collects/persist registrations
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        constructSec = (t1 - t0) / 1e9
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t1) / 1e9 + constructSec
-      }
-      if (!cold) run() // warm-up, unlistened
       rows.clear()
       frameHist.clear()
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobDescription(s"profile: $n")
-      sampling = sample
-      val sec = run()
-      sampling = false
-      spark.sparkContext.removeSparkListener(listener)
+      // construction = lambda invocation: plan build + any eager driver
+      // collects/persist registrations
+      val (constructSec, sec) = Bench.time(spark, timedLeg = leg => {
+        spark.sparkContext.addSparkListener(listener)
+        spark.sparkContext.setJobDescription(s"profile: $n")
+        sampling = sample
+        try leg() finally {
+          sampling = false
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      })(fn(spark, sfDir))
       // listener bus is async; drain before reading
       Thread.sleep(300)
       println(f"\n════ $n: ${sec}%.3f s (timed run, ${rows.size} stages) ════")
@@ -135,9 +128,6 @@ object QueryProfile {
           case (k, c) => println(f"$c%6d  $k")
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
     }
     spark.stop()
   }

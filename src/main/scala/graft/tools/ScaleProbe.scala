@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 /** One-off scale probe (VERDICT r10 #6): replicate the documents and
   * embeddings fixtures N× with remapped ids into `target/scaleprobe/`,
   * then run selected `SparkEntry.queries` entries at 1× and N× under the
-  * bench protocol (one untimed warm execution, then a timed noop-sink
-  * execution) and print both times. Purpose: one-number evidence that
-  * the top-k/group-count-bound operators (q_rrf_hybrid's fuse,
-  * q_mixture_sample's quota draw) do not grow super-linearly with corpus
-  * size — their corpus-scale stages are the rankers/draw scan, their
+  * bench protocol ([[graft.Bench.time]]) and print both times.
+  * Purpose: one-number evidence that the top-k/group-count-bound
+  * operators (q_rrf_hybrid's fuse, q_mixture_sample's quota draw) do not
+  * grow super-linearly with corpus size — their corpus-scale stages are the rankers/draw scan, their
   * result-scale stages are k-row. Not part of the gated surface — a
-  * diagnosis tool like DecontamProfile.
+  * diagnosis tool like QueryProfile.
   *
   * Replica k shifts ids by k·10⁹, so every replicated row is a distinct
   * document/vector; replica 0 is the original corpus, which keeps
@@ -97,8 +96,8 @@ object ScaleProbe {
     require(mode == "exact" || mode == "perturb" || mode == "shiftparts"
         || mode == "perturbemb",
       s"mode: $mode")
-    // arg 6 `pct=N`: perturbation strength for the perturb modes. The
-    // 15% default keeps replicas NEAR-dup-able (the similarity families'
+    // trailing arg `pct=N`: perturbation strength for the perturb modes.
+    // The 15% default keeps replicas NEAR-dup-able (the similarity families'
     // recall surface); for DEDUP CLUSTERING probes 15% is a fixture
     // artifact — ten 15%-perturbed replicas of one base doc still pair
     // with EACH OTHER (pairwise jaccard ≈ 0.5), so candidate pairs grow
@@ -110,10 +109,9 @@ object ScaleProbe {
     // only as the exact 6th arg, a misplaced pct= silently fell back to
     // the 15% default and reproduced the replica self-pairing artifact
     // the flag exists to avoid); unrecognized trailing args fail loudly
-    val trailing = args.drop(4).filterNot(a =>
-      a == "cold" || a.startsWith("pct="))
+    val trailing = args.drop(4).filterNot(_.startsWith("pct="))
     require(trailing.isEmpty,
-      s"unrecognized args: ${trailing.mkString(",")} (expected 'cold' and/or 'pct=N')")
+      s"unrecognized args: ${trailing.mkString(",")} (expected 'pct=N')")
     val perturbPct = args.collectFirst {
       case s if s.startsWith("pct=") => s.stripPrefix("pct=").toInt
     }.getOrElse(15)
@@ -191,31 +189,9 @@ object ScaleProbe {
     val nDocs = spark.read.parquet(s"$outDir/documents.parquet").count()
     println(s"[scaleprobe] replicated corpus ($mode): $nDocs docs at $outDir")
 
-    // arg 5 "cold": drop intra-query persists between the warm and timed
-    // runs. The default (warm) protocol matches Bench — a query that
-    // persists a bounded aggregate legitimately reuses it — but for
-    // SCALE-posture readings on such queries the warm timed leg skips
-    // the corpus-scale scan entirely (measured ratios < 1 at 10× data),
-    // so the cold leg is the honest scan-scaling number.
-    val cold = args.drop(4).contains("cold")
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    def timed(name: String, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        probeQueries.getOrElse(name, graft.SparkEntry.queries(name))(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm
-      if (cold) dropCaches()
-      val t = once()
-      dropCaches()
-      t
-    }
+    def timed(name: String, dir: String): Double =
+      graft.Bench.time(spark)(
+        probeQueries.getOrElse(name, graft.SparkEntry.queries(name))(spark, dir))._2
     queries.foreach { q =>
       val t1 = timed(q, sfDir)
       val tN = timed(q, outDir)

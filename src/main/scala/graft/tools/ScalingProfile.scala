@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * text files under `target/scaling` (replicating the reference's
   * `words.txt` plus the testdata document bodies until the requested
   * size), then (b) times the full tokenize→count→sort pipeline at a
-  * ladder of local[N] widths, one fresh SparkSession per width.
+  * ladder of local[N] widths under the bench protocol
+  * ([[graft.Bench.time]]), one fresh SparkSession per width.
   * Speedup/efficiency are reported against the FIRST width in the
   * ladder (and labelled with it — pass 1 first for a true-serial
   * baseline). Diagnosis/benchmark tool, not gated surface.
@@ -101,12 +102,8 @@ object ScalingProfile {
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       try {
-        // warm (JIT, codegen, page cache), then timed — Bench protocol
-        def run(): Unit = graft.wc.WordCount.fromDirectory(spark, dir.toString)
-          .write.mode("overwrite").format("noop").save()
-        run()
-        val t0 = System.nanoTime(); run()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = graft.Bench.time(spark)(
+          graft.wc.WordCount.fromDirectory(spark, dir.toString))._2
         if (t1.isNaN) t1 = sec
         println(f"[scaling] local[$n%2d]  $sec%7.2f s  " +
           f"speedup-vs-local[$base] ${t1 / sec}%5.2f×  " +
@@ -132,14 +129,10 @@ object ScalingProfile {
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       try {
-        def run(): Unit =
+        val sec = graft.Bench.time(spark)(
           graft.wc.WordCount.fromText(
-              spark.read.text(files.take(take): _*), "value",
-              graft.tok.Tokenizer.DefaultSplitRegex)
-            .write.mode("overwrite").format("noop").save()
-        run()
-        val t0 = System.nanoTime(); run()
-        val sec = (System.nanoTime() - t0) / 1e9
+            spark.read.text(files.take(take): _*), "value",
+            graft.tok.Tokenizer.DefaultSplitRegex))._2
         if (tw1.isNaN) tw1 = sec
         println(f"[weak]    local[$n%2d]  $take%3d files  $sec%7.2f s  " +
           f"efficiency-vs-local[$base] ${tw1 / sec}%5.2f")

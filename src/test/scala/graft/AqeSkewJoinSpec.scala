@@ -114,7 +114,7 @@ class AqeSkewJoinSpec extends SparkSpec {
       assert(rowOn === rowOff)
       info(f"skewJoin on: $tOn%.2f s, off: $tOff%.2f s " +
         "(fixture-scale; the sf0.1 timing contrast is recorded in " +
-        "BASELINE.md from graft.tools.SkewProfile)")
+        "BASELINE.md)")
     } finally restore()
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The bench outlier/prior policy is pure — test it without a session:
-  * re-time only past 2× the prior, flag sustained regressions, and never
-  * let a confirmed regression become its own baseline (VERDICT r09 #5).
+/** The bench confirmation/prior policy is pure — test it without a
+  * session: re-time once only past 2× the prior, publish the better
+  * number, flag what is still slow, and never let a stall become its own
+  * baseline. The timing protocol itself ([[Bench.time]]) runs on the
+  * shared session.
   */
-class BenchPolicySpec extends AnyFunSuite {
+class BenchPolicySpec extends SparkSpec {
 
   private def counting(vals: Double*): (() => Double, () => Int) = {
     var i = 0
@@ -15,87 +15,83 @@ class BenchPolicySpec extends AnyFunSuite {
   }
 
   test("no prior, under the sampling floor: first timing reported, no re-time") {
-    val (re, n) = counting(99.0, 99.0)
-    assert(Bench.settle(None, 0.7, re) === ((0.7, false)))
+    // with nothing to compare against there is nothing to confirm
+    val (re, n) = counting(99.0)
+    assert(Bench.confirm(None, 0.7, re) === ((0.7, false)))
     assert(n() === 0)
   }
 
   test("within 2x of prior and under the floor: no re-time") {
-    val (re, n) = counting(99.0, 99.0)
-    assert(Bench.settle(Some(0.6), 0.9, re) === ((0.9, false)))
+    val (re, n) = counting(99.0)
+    assert(Bench.confirm(Some(0.6), 0.9, re) === ((0.9, false)))
     assert(n() === 0)
   }
 
   test("heavy queries with no prior are sampled: median reported, samples kept") {
-    // VERDICT r10 #2: expensive NEW queries log all 3 samples even
-    // unflagged, so unexplained drift is diagnosable post-hoc
-    val (re, n) = counting(2.4, 2.6)
-    assert(Bench.settleSamples(None, 2.5, re) ===
-      ((2.5, false, Seq(2.5, 2.4, 2.6))))
-    assert(n() === 2)
+    // a heavy query is no longer median-of-3 sampled: its one cleared
+    // timing is reported un-retimed, and that sample is kept as its prior
+    // for the next sweep
+    val (re, n) = counting(99.0)
+    assert(Bench.confirm(None, 2.5, re) === ((2.5, false)))
+    assert(n() === 0)
+    assert(Bench.nextPriors(Map("q_new" -> 2.5), Map.empty, Set.empty) ===
+      Map("q_new" -> 2.5))
   }
 
   test("in-band heavy with a prior runs ONCE (r16 wall-clock cut)") {
-    // VERDICT r15 #1: the unconditional median-of-3 on every ≥1 s query
-    // cost ~340 s of the r15 sweep and the driver timed out. A heavy
-    // whose first timing sits within DriftSampleFactor× its prior is a
-    // steady number — no re-time, no samples.
     val (re, n) = counting(99.0, 99.0)
-    assert(Bench.settleSamples(Some(2.0), 2.2, re) ===
-      ((2.2, false, Seq(2.2))))
-    assert(n() === 0)
+    assert(Bench.confirm(Some(2.0), 2.2, re) === ((2.2, false)))
     // improvements are in-band too
-    val (re2, n2) = counting(99.0)
-    assert(Bench.settle(Some(3.0), 1.4, re2) === ((1.4, false)))
-    assert(n2() === 0)
-  }
-
-  test("sustained drift under the first-timing trigger still flags via the median") {
-    // the q_neardup_jaccard r10 shape: carried prior high enough that the
-    // first timing doesn't trip 2×, but the heavy drift band (first >
-    // 1.5× prior) re-times anyway and the median exceeds 2× the prior →
-    // flagged, not silent
-    val (re, _) = counting(3.3, 3.1)
-    assert(Bench.settle(Some(1.5), 2.9, re) === ((3.1, true)))
+    assert(Bench.confirm(Some(3.0), 1.4, re) === ((1.4, false)))
+    assert(n() === 0)
   }
 
   test("sub-second movers past 2x prior draw the confirmation samples") {
-    // VERDICT r15 wrong #2: the q_join_outer shape (0.39 s prior, 1.21 s
-    // first = 3.1×) must carry samples so the watch-list can adjudicate
-    // it post-hoc; the median decides, and the flag floor still applies
-    val (re, n) = counting(0.41, 0.44)
-    assert(Bench.settleSamples(Some(0.39), 1.21, re) ===
-      ((0.44, false, Seq(1.21, 0.41, 0.44))))
-    assert(n() === 2)
+    // the q_join_outer shape (0.39 s prior, 1.21 s first = 3.1×): one
+    // fresh re-time, which recovers
+    val (re, n) = counting(0.41)
+    assert(Bench.confirm(Some(0.39), 1.21, re) === ((0.41, false)))
+    assert(n() === 1)
   }
 
   test("first timing past 2x, median recovers: de-noised, not regressed") {
-    // 13.0 then 1.8, 2.2 → median 2.2, under 2×2.0
-    val (re, n) = counting(1.8, 2.2)
-    assert(Bench.settle(Some(2.0), 13.0, re) === ((2.2, false)))
-    assert(n() === 2)
+    // the median-of-3 is now one fresh-session re-time. Recorded stall
+    // victims it recovers (r19 and r18 sweeps): q_minhash_k_sweep first
+    // 10.87 s / fresh 0.549 s, q_lang_confusion 1.408 / 0.306 s
+    val (re, n) = counting(0.549)
+    assert(Bench.confirm(Some(0.55), 10.87, re) === ((0.549, false)))
+    assert(n() === 1)
+    assert(Bench.confirm(Some(0.31), 1.408, () => 0.306) === ((0.306, false)))
   }
 
   test("median still past 2x: reported AND flagged regressed") {
-    // the r9 q_pagerank shape: slow on all three back-to-back timings
-    val (re, _) = counting(13.3, 12.9)
-    assert(Bench.settle(Some(2.0), 13.1, re) === ((13.1, true)))
+    // the r9 q_pagerank shape: 13.1 s against a 1.9 s prior and still
+    // slow in a fresh session — a plan regression, flagged
+    val (re, n) = counting(12.9)
+    assert(Bench.confirm(Some(1.9), 13.1, re) === ((12.9, true)))
+    assert(n() === 1)
   }
 
   test("sub-second excursions de-noise via the median but never flag") {
-    // the q_pivot shape: 0.20 s prior, ~0.5 s sustained — scheduler noise
-    // territory (RegressFloorSec), not a regression worth a flag/retry
-    val (re, n) = counting(0.48, 0.49)
-    assert(Bench.settle(Some(0.20), 0.50, re) === ((0.49, false)))
-    assert(n() === 2)
+    // the q_pivot shape: 0.20 s prior, ~0.5 s sustained — past 2× fresh
+    // too, but under RegressFloorSec: scheduler noise, never flagged
+    val (re, n) = counting(0.49)
+    assert(Bench.confirm(Some(0.20), 0.50, re) === ((0.49, false)))
+    assert(n() === 1)
+  }
+
+  test("adjudicate publishes the better number and re-judges the flag on it") {
+    // fresh run slower than the first (unlucky): keep the better
+    assert(Bench.confirm(Some(0.61), 3.1, () => 4.0) === ((3.1, true)))
+    // recovery into the 1-2x band: in-band, unflagged
+    assert(Bench.confirm(Some(1.0), 9.0, () => 1.6) === ((1.6, false)))
   }
 
   test("zero/negative prior never divides the policy") {
-    // ≥2 s still samples (the band is priorless by design) but a
-    // degenerate prior can never produce a flag
-    val (re, n) = counting(13.2, 12.8)
-    assert(Bench.settle(Some(0.0), 13.0, re) === ((13.0, false)))
-    assert(n() === 2)
+    val (re, n) = counting(99.0, 99.0)
+    assert(Bench.confirm(Some(0.0), 13.0, re) === ((13.0, false)))
+    assert(Bench.confirm(Some(-1.0), 13.0, re) === ((13.0, false)))
+    assert(n() === 0)
   }
 
   test("nextPriors: stall-scale regressions keep the old prior, the rest refresh") {
@@ -111,191 +107,69 @@ class BenchPolicySpec extends AnyFunSuite {
     // the BENCH_r10 q_source_overlap shape: 0.49 s builder-box prior vs a
     // sustained ~1.1 s driver-box number — a cross-box envelope, not a
     // stall; accepting the confirmed number makes the flag one-shot
-    // instead of permanent (r11 policy)
     val next = Bench.nextPriors(
       Map("q_so" -> 1.13), Map("q_so" -> 0.49), Set("q_so"))
     assert(next("q_so") === 1.13) // 1.13 ≤ 4×0.49: accepted
   }
 
-  test("nextPriors: degraded-tail cold timings never arm as priors") {
-    // VERDICT r16 #1 / ADVICE r16: a past-budget query records a cold
-    // unwarmed single run — carrying it as a prior would mask real
-    // regressions next sweep (inflated baseline) or fake them (contended
-    // baseline). Old prior kept when present; priorless stays priorless.
-    val next = Bench.nextPriors(
-      times = Map("q_a" -> 312.7, "q_b" -> 0.9, "q_new" -> 63.9),
-      priors = Map("q_a" -> 1.0, "q_b" -> 1.0),
-      regressed = Set.empty,
-      degraded = Set("q_a", "q_new"))
-    assert(next("q_a") === 1.0)      // old prior held, cold 312.7 discarded
-    assert(next("q_b") === 0.9)      // in-protocol: fresh measurement
-    assert(!next.contains("q_new"))  // degraded + no prior: stays priorless
-  }
-
-  test("splitHeadline: the 2x gate reads in-protocol seconds only") {
-    // VERDICT r16 #1: BENCH_r16's single 1035.6 s value mixed 247 cold
-    // degraded runs with warm-protocol timings and nominally failed the
-    // gate while the outliers re-ran 55x faster under the same harness.
-    // binary-exact values so the equality is order-insensitive
-    val times = Map("q_warm1" -> 1.5, "q_warm2" -> 2.5, "q_cold" -> 312.75)
-    val (inband, degraded) = Bench.splitHeadline(times, Set("q_cold"))
-    assert(inband === 4.0)
-    assert(degraded === 312.75)
-    // no degraded tail → everything is in-band
-    assert(Bench.splitHeadline(times, Set.empty) === ((316.75, 0.0)))
-  }
-
   test("parsePriors prefers the priors map over measured queries") {
     val txt = """{"metric":"total","value":14.0,"queries":{"q_a":13.100,"q_b":0.900},""" +
-      """"regressed":["q_a"],"priors":{"q_a":1.900,"q_b":0.900},"priors_cpus":32,"sf":"/d/sf0.1"}"""
+      """"regressed":["q_a"],"sf":"/d/sf0.1","priors":{"q_a":1.900,"q_b":0.900},""" +
+      """"priors_cpus":32,"protocol":"cleared"}"""
     assert(Bench.parsePriors(txt, "/d/sf0.1", 32) ===
       Map("q_a" -> 1.9, "q_b" -> 0.9))
   }
 
   test("parsePriors discards priors recorded at a different core count") {
-    // VERDICT r18 #3: an 8-core scaling sweep must not arm the baseline a
-    // 32-core sweep re-times against (and vice versa)
-    val txt = """{"queries":{"q_a":2.500},"priors":{"q_a":2.500},"priors_cpus":8,"sf":"/d/sf0.1"}"""
+    // an 8-core scaling sweep must not arm the baseline a 32-core sweep
+    // re-times against (and vice versa)
+    val txt = """{"queries":{"q_a":2.500},"priors":{"q_a":2.500},"priors_cpus":8,""" +
+      """"protocol":"cleared","sf":"/d/sf0.1"}"""
     assert(Bench.parsePriors(txt, "/d/sf0.1", 32) === Map.empty)
     assert(Bench.parsePriors(txt, "/d/sf0.1", 8) === Map("q_a" -> 2.5))
   }
 
   test("parsePriors discards width-untagged priors (pre-r19 files)") {
-    // a prior whose sweep width is unrecorded is unverifiable — the exact
-    // contamination class VERDICT r18 #3 found (8-core priors armed,
-    // indistinguishable from 32-core ones); the next full sweep re-arms
-    val txt = """{"metric":"total","queries":{"q_a":2.500,"wc_words":0.300},"sf":"/d/sf0.1"}"""
-    assert(Bench.parsePriors(txt, "/d/sf0.1", 32) === Map.empty)
+    // a prior whose sweep width or timing protocol is unrecorded is
+    // unverifiable; the next full sweep re-arms
+    val untaggedWidth = """{"metric":"total","queries":{"q_a":2.500,"wc_words":0.300},""" +
+      """"priors":{"q_a":2.500},"protocol":"cleared","sf":"/d/sf0.1"}"""
+    assert(Bench.parsePriors(untaggedWidth, "/d/sf0.1", 32) === Map.empty)
+    // the 32-core warm-reuse record: right sf and width, no protocol tag —
+    // its persist-heavy priors read up to 4.2x low under the cleared
+    // protocol and would flood REGRESSED
+    val warmReuse = """{"metric":"total","queries":{"q_a":2.500},""" +
+      """"priors":{"q_a":2.500},"priors_cpus":32,"sf":"/d/sf0.1"}"""
+    assert(Bench.parsePriors(warmReuse, "/d/sf0.1", 32) === Map.empty)
   }
 
   test("parsePriors discards priors from a different scale factor") {
-    val txt = """{"queries":{"q_a":2.500},"priors":{"q_a":2.500},"priors_cpus":32,"sf":"/d/sf0.001"}"""
+    val txt = """{"queries":{"q_a":2.500},"priors":{"q_a":2.500},"priors_cpus":32,""" +
+      """"protocol":"cleared","sf":"/d/sf0.001"}"""
     assert(Bench.parsePriors(txt, "/d/sf0.1", 32) === Map.empty)
   }
 
-  test("probe width is bounded by the sweep parallelism and the hardware") {
-    assert(Bench.probeWidth >= 1)
-    assert(Bench.probeWidth <= 32)
-    assert(Bench.probeWidth <= Runtime.getRuntime.availableProcessors)
-  }
-
-  test("wide probe measures wall-clock for the full thread group") {
-    // VERDICT r11 #1: the group must not finish faster than one member's
-    // sequential work could — a 2-thread trial on any box takes at least
-    // as long as the per-thread loop alone would on an infinite machine
-    val t = Bench.cpuProbeWide(threads = 2)
-    assert(t > 0.0 && t.isFinite)
-  }
-
-  test("representative tier names real queries, no dups, sane size") {
-    val tier = SparkEntry.repTier
-    val unknown = tier.filterNot(SparkEntry.queries.keySet)
-    assert(unknown.isEmpty, s"repTier names missing queries: $unknown")
-    assert(tier.distinct.size === tier.size, "repTier has duplicates")
-    // composition contract: heavies + watch-list + family reps land in a
-    // band a mid-round sweep can run in a few minutes; a tier that creeps
-    // toward the full surface defeats its purpose
-    assert(tier.size >= 50 && tier.size <= 90, s"tier size ${tier.size}")
-    // the cross-round watch-list must stay in — its priors need a reading
-    // every sweep
-    Seq("q_neardup_jaccard", "q_pagerank", "q_agg_variants",
-        "q_minhash_acc", "q_source_overlap")
-      .foreach(w => assert(tier.contains(w), s"watch-list $w missing"))
-  }
-
-  test("inbandCount partitions exactly what value_inband sums") {
-    // ADVICE r17: a degraded query whose timed run THREW is in the
-    // degraded name list but absent from times — `times.size - deg.size`
-    // undercounts (negative with enough errors); counting from times
-    // itself keeps n_inband consistent with value_inband
-    val times = Map("q_a" -> 1.0, "q_b" -> 2.0, "q_cold" -> 9.0)
-    // q_cold degraded+measured, q_err degraded+errored (absent from times)
-    assert(Bench.inbandCount(times, Set("q_cold", "q_err")) === 2)
-    assert(Bench.inbandCount(times, Set.empty) === 3)
-    assert(Bench.inbandCount(Map.empty, Set("q_err1", "q_err2")) === 0)
-  }
-
-  test("adjudication triggers only past 4x an armed prior and the noise floor") {
-    // VERDICT r17 #1 — the q_image_neardup shape: 0.61 s prior, 25.38 s
-    // in-band settled value must trigger the fresh-context confirmation
-    assert(Bench.needsAdjudication(Some(0.61), 25.38))
-    // under 4x: the normal 2x flag machinery owns it, no extra rerun
-    assert(!Bench.needsAdjudication(Some(1.0), 3.9))
-    // sub-floor movers are scheduler noise, never worth a session restart
-    assert(!Bench.needsAdjudication(Some(0.1), 0.9))
-    // no prior / degenerate prior: nothing to adjudicate against
-    assert(!Bench.needsAdjudication(None, 25.0))
-    assert(!Bench.needsAdjudication(Some(0.0), 25.0))
-  }
-
-  test("adjudicate publishes the better number and re-judges the flag on it") {
-    // stall victim: fresh context recovers → recovered value, no flag
-    assert(Bench.adjudicate(0.61, 25.38, 0.98) === ((0.98, false)))
-    // real plan regression: still slow in a fresh context → flag stands
-    assert(Bench.adjudicate(1.0, 13.0, 12.5) === ((12.5, true)))
-    // fresh run slower than the stalled one (unlucky): keep the better
-    assert(Bench.adjudicate(0.61, 3.1, 4.0) === ((3.1, true)))
-    // recovery into the 1-2x band: in-band, unflagged
-    assert(Bench.adjudicate(1.0, 9.0, 1.6) === ((1.6, false)))
-  }
-
-  test("prior arming is vetoed when the sweep's probe context is elevated") {
-    // VERDICT r17 #2 — the r17 rested close (wide 0.653 s end probe,
-    // steal 1.17%) sat outside the 0.50-class norm and still armed,
-    // ratcheting the baseline 8%; the gate now refuses it
-    assert(!Bench.probesCleanForArming(0.43, 0.653, 1.17))
-    // the r16 pristine close (0.434 / 0.478, steal ~0) arms
-    assert(Bench.probesCleanForArming(0.434, 0.478, 0.03))
-    // contended driver sweep (r17: wide 0.923, steal 3.66%) is vetoed
-    // on both channels
-    assert(!Bench.probesCleanForArming(0.43, 0.923, 3.66))
-    assert(!Bench.probesCleanForArming(0.43, 0.49, 3.66))
-    // unreadable steal (-1 sentinel) doesn't veto on its own
-    assert(Bench.probesCleanForArming(0.43, 0.49, -1.0))
-  }
-
-  test("armPriors carries old priors on veto, arms on clean/bootstrap/force") {
-    val fresh = Map("q_a" -> 1.2, "q_new" -> 0.7)
-    val old = Map("q_a" -> 1.0)
-    assert(Bench.armPriors(clean = true, fresh, old) === ((fresh, true)))
-    // veto: previous priors verbatim — elevated numbers never baseline
-    assert(Bench.armPriors(clean = false, fresh, old) === ((old, false)))
-    // bootstrap: no old priors → the first sweep's numbers arm regardless
-    assert(Bench.armPriors(clean = false, fresh, Map.empty) === ((fresh, true)))
-    // deliberate re-baseline override
-    assert(Bench.armPriors(clean = false, fresh, old, force = true) ===
-      ((fresh, true)))
-  }
-
-  test("segment slices are proportional with automatic rollover") {
-    // VERDICT r17 #3: 310 queries, 1500 s — the first 20-query segment
-    // gets its proportional share
-    val s1 = Bench.segmentSlice(1500.0, 310, 20)
-    assert(math.abs(s1 - 1500.0 * 20 / 310) < 1e-9)
-    // a fast segment leaves MORE remaining budget for fewer remaining
-    // queries → later slices grow (rollover), never shrink below fair
-    val s2 = Bench.segmentSlice(1500.0 - 50.0, 290, 20)
-    assert(s2 > s1)
-    // exhausted budget → zero slice: the whole segment degrades, exactly
-    // the old global-backstop behavior
-    assert(Bench.segmentSlice(0.0, 100, 20) === 0.0)
-    assert(Bench.segmentSlice(-3.0, 100, 20) === 0.0)
-    // last partial segment: capped at the remaining query count
-    assert(Bench.segmentSlice(100.0, 10, 20) === 100.0)
-    assert(Bench.segmentSlice(100.0, 0, 20) === 0.0)
-  }
-
-  test("stall evidence digest is compact and never throws") {
-    val ev = Bench.stallEvidence(Bench.gcTotals())
-    assert(ev.contains("psi_cpu=") && ev.contains("gc_run=") &&
-      ev.contains("threads="))
-    // one line, bounded enough for a JSON string field
-    assert(!ev.contains("\n"))
+  test("time releases every SQL-cache and RDD-level persist the query leaves") {
+    import org.apache.spark.storage.StorageLevel
+    var persisted: org.apache.spark.sql.DataFrame = null
+    val (construct, total) = Bench.time(spark) {
+      // the dedup/graph-family shapes: an eager DataFrame persist and an
+      // eager localCheckpoint cut, both made while the plan is built
+      persisted = spark.range(1000).toDF("id").persist()
+      persisted.count()
+      spark.sparkContext.parallelize(1 to 100, 4).localCheckpoint().count()
+      persisted.where("id % 2 = 0")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+    assert(persisted.storageLevel === StorageLevel.NONE)
+    assert(construct > 0.0 && construct <= total)
   }
 
   test("host evidence readers degrade, never throw") {
-    // on this CI box both are readable; the contract on any box is
-    // "number or the documented sentinel", never an exception
+    // the contract on any box is "number or the documented sentinel",
+    // never an exception
     val l = Bench.loadAvg1m()
     assert(l >= 0.0 || l === -1.0)
     val (steal, total) = Bench.cpuJiffies()
