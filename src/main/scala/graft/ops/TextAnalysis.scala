@@ -20,10 +20,12 @@ object TextAnalysis {
     * (the reference's 38-char set) collapsed to one space, ends trimmed.
     * Two documents equal under this normalization are duplicates for
     * counting purposes — same definition the reference's tokenizer implies
-    * (delimiters carry no identity, `tokenizer.c:37-45`).
+    * (delimiters carry no identity, `tokenizer.c:37-45`). Built as the
+    * tokens joined by one space; `array_join`, unlike `concat_ws`, keeps a
+    * null text null.
     */
   def normalize(text: Column): Column =
-    trim(regexp_replace(lower(text), Tokenizer.DefaultSplitRegex, " "))
+    array_join(Tokenizer.lowerTokens(text), " ")
 
   /** Lowercased non-empty tokens (reference semantics). */
   def tokens(text: Column): Column = Tokenizer.lowerTokens(text)

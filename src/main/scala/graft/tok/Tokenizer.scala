@@ -2,6 +2,7 @@ package graft.tok
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expr.DelimiterSplit
 
 /** Configurable-delimiter tokenization, the engine's analogue of the
   * reference tokenizer (`tokenizer.c:47-79` `next_word`) and its delimiter
@@ -17,9 +18,12 @@ import org.apache.spark.sql.functions._
   *     (`hash_map.c:25-28`) — exposed here as [[lowerTokens]].
   *
   * Implementation is Spark-first: the delimiter set is compiled once, at plan
-  * time, into a Java-regex character class that Catalyst constant-folds into
-  * the codegen'd `split`. There is no per-row interpretation of the config
-  * (the reference rescans its delimiter array per byte, `tokenizer.c:37-45`).
+  * time, into a 256-entry table inside the codegen'd [[DelimiterSplit]]
+  * expression, which walks each row's UTF-8 bytes once (the reference
+  * rescans its delimiter array per byte, `tokenizer.c:37-45`). The regex
+  * form of the set, [[charClassRegex]], remains only for SQL strings: the
+  * DuckDB oracle's `string_split_regex` and the benchmark's
+  * split-yield probe.
   */
 object Tokenizer {
 
@@ -66,15 +70,17 @@ object Tokenizer {
 
   /** Split a string column into an array of non-empty tokens.
     * Equivalent of the `next_word` loop: maximal non-delimiter runs, empty
-    * tokens suppressed. Pure `functions._` → whole-stage codegen.
+    * tokens suppressed. Every char of `delims` must be U+0000–U+00FF.
     */
-  def tokens(text: Column, splitRegex: String = DefaultSplitRegex): Column =
-    filter(split(text, splitRegex), t => length(t) > lit(0))
+  def tokens(text: Column, delims: Set[Char] = DefaultDelimiters): Column =
+    DelimiterSplit(delims)(text)
 
   /** Tokens case-folded for case-insensitive counting (`hash_map.c:27-28`).
     * C `tolower` is ASCII; we define the semantics as UTF-8 lower (documented
-    * divergence, SURVEY §2.4 — identical on ASCII input).
+    * divergence, SURVEY §2.4 — identical on ASCII input). The whole line is
+    * lowered before the split, so context-dependent case rules (final sigma)
+    * see the same neighbours as in the text.
     */
-  def lowerTokens(text: Column, splitRegex: String = DefaultSplitRegex): Column =
-    tokens(lower(text), splitRegex)
+  def lowerTokens(text: Column, delims: Set[Char] = DefaultDelimiters): Column =
+    tokens(lower(text), delims)
 }

@@ -131,8 +131,7 @@ object ScalingProfile {
       try {
         val sec = graft.Bench.time(spark)(
           graft.wc.WordCount.fromText(
-            spark.read.text(files.take(take): _*), "value",
-            graft.tok.Tokenizer.DefaultSplitRegex))._2
+            spark.read.text(files.take(take): _*), "value"))._2
         if (tw1.isNaN) tw1 = sec
         println(f"[weak]    local[$n%2d]  $take%3d files  $sec%7.2f s  " +
           f"efficiency-vs-local[$base] ${tw1 / sec}%5.2f")

@@ -9,7 +9,7 @@ import graft.tok.Tokenizer
   * (`/root/reference/word_count_mpi.c:391-443`; pipeline decomposition
   * SURVEY §2.1 O1–O11) — rebuilt as a declarative Catalyst plan:
   *
-  *   FileScan → Generate(explode(split(lower))) → Filter →
+  *   FileScan → Generate(explode(delimiter_split(lower))) →
   *   HashAggregate(partial) → Exchange(hash(word)) → HashAggregate(final) →
   *   Exchange(range) → Sort
   *
@@ -44,8 +44,8 @@ object WordCount {
     * (matches the reference's `strcmp` sort, `cell.c:18-20`).
     */
   def fromText(df: DataFrame, textCol: String,
-               splitRegex: String = Tokenizer.DefaultSplitRegex): DataFrame =
-    df.select(explode(Tokenizer.lowerTokens(col(textCol), splitRegex)).as("word"))
+               delims: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
+    df.select(explode(Tokenizer.lowerTokens(col(textCol), delims)).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
@@ -57,22 +57,19 @@ object WordCount {
     * reference hand-rolls (SURVEY §2.1 O2/O3).
     */
   def fromDirectory(spark: SparkSession, path: String,
-                    delimiterFile: Option[String] = None): DataFrame = {
-    val regex = delimiterFile
-      .map(f => Tokenizer.charClassRegex(Tokenizer.delimitersFromFile(f)))
-      .getOrElse(Tokenizer.DefaultSplitRegex)
-    fromText(spark.read.text(path), "value", regex)
-  }
+                    delimiterFile: Option[String] = None): DataFrame =
+    fromText(spark.read.text(path), "value",
+      delimiterFile.map(Tokenizer.delimitersFromFile).getOrElse(Tokenizer.DefaultDelimiters))
 
   /** Per-file word counts — keeps the lineage the reference discards
     * (`input_file_name()` instead of the concatenated-corpus view).
     */
   def perFile(spark: SparkSession, path: String,
-              splitRegex: String = Tokenizer.DefaultSplitRegex): DataFrame =
+              delims: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
     spark.read.text(path)
       .select(input_file_name().as("file"), col("value"))
       .select(col("file"),
-        explode(Tokenizer.lowerTokens(col("value"), splitRegex)).as("word"))
+        explode(Tokenizer.lowerTokens(col("value"), delims)).as("word"))
       .groupBy("file", "word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("file", "word")

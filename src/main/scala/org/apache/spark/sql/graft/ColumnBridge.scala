@@ -8,9 +8,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `ExpressionUtils` `private[sql]`; expressions that carry RUNTIME
   * objects (e.g. a broadcast Bloom filter —
   * `graft.expr.BloomMightContainLong`) cannot go through the SQL function
-  * registry the way the stateless `graft.expr` family does, so this is
-  * the one sanctioned hop from a constructed Catalyst expression to a
-  * user-facing Column. Nothing else belongs in this package.
+  * registry the way the stateless `graft.expr` family does, and the
+  * tokenizer (`graft.expr.DelimiterSplit`) must work on sessions built
+  * without `GraftExtensions`, so this is the one sanctioned hop from a
+  * constructed Catalyst expression to a user-facing Column. Nothing else
+  * belongs in this package.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

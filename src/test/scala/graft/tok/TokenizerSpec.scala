@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
 class TokenizerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tokensOf(s: String, regex: String = Tokenizer.DefaultSplitRegex): Seq[String] =
+  private def tokensOf(s: String, delims: Set[Char] = Tokenizer.DefaultDelimiters): Seq[String] =
     Seq(s).toDF("t")
-      .select(Tokenizer.tokens(col("t"), regex).as("toks"))
+      .select(Tokenizer.tokens(col("t"), delims).as("toks"))
       .as[Seq[String]].head()
 
   test("delimiter set is exactly whitespace + the 32 distinct config bytes") {
@@ -22,11 +22,15 @@ class TokenizerSpec extends SparkSpec {
   }
 
   test("default config delimiters byte-match the reference delimiters.txt") {
-    val ref = java.nio.file.Paths.get("/root/reference/delimiters.txt")
-    assume(java.nio.file.Files.exists(ref), "reference checkout not present")
+    // the reference's `delimiters.txt:1`, transcribed byte for byte (SURVEY O5)
+    val ref = java.nio.file.Paths.get(getClass.getResource("/delimiters.txt").toURI)
     val bytes = java.nio.file.Files.readAllBytes(ref)
     assert(bytes.length === 34) // [ and ] listed twice in the file
     assert(bytes.map(b => (b & 0xff).toChar).toSet === Tokenizer.DefaultConfigDelimiters)
+    // and through the loader: the file's set IS the default set
+    val loaded = Tokenizer.delimitersFromFile(ref.toString)
+    assert(loaded === Tokenizer.DefaultDelimiters)
+    assert(tokensOf("a[b]c{d}e~f`g\\h\tI", loaded) === Seq("a", "b", "c", "d", "e", "f", "g", "h", "I"))
   }
 
   test("every one of the 36 delimiters splits a word pair (per-byte table)") {
@@ -64,7 +68,7 @@ class TokenizerSpec extends SparkSpec {
     val p = java.util.regex.Pattern.compile(re)
     assert(p.matcher("\\^][-a").matches())
     assert(!p.matcher("b").find())
-    assert(tokensOf("x\\y^z]w[v-u", re) === Seq("x", "y", "z", "w", "v", "u"))
+    assert(tokensOf("x\\y^z]w[v-u", tricky) === Seq("x", "y", "z", "w", "v", "u"))
   }
 
   test("charClassRegex rejects an empty delimiter set") {
@@ -77,7 +81,48 @@ class TokenizerSpec extends SparkSpec {
     val ds = Tokenizer.delimitersFromFile(dir.resolve("d.txt").toString)
     assert(ds === Set(' ', '\t', '\n', '\r', '@', '#'))
     // a char NOT in this set (e.g. comma) must not split
-    val re = Tokenizer.charClassRegex(ds)
-    assert(tokensOf("a,b@c d", re) === Seq("a,b", "c", "d"))
+    assert(tokensOf("a,b@c d", ds) === Seq("a,b", "c", "d"))
+  }
+
+  test("a delimiter outside U+0000-U+00FF is rejected with its code point") {
+    val e = intercept[IllegalArgumentException] { Tokenizer.tokens(col("t"), Set(' ', 'Σ')) }
+    assert(e.getMessage.contains("U+03A3"))
+    intercept[IllegalArgumentException] { Tokenizer.tokens(col("t"), Set.empty[Char]) }
+  }
+
+  test("delimiters U+0080-U+00FF split the two-byte UTF-8 sequence, nothing else") {
+    // a config byte 0xE9 is the char U+00E9 (é, C3 A9 in UTF-8 text)
+    val ds = Set(' ', '\u00e9', '\u00a0')
+    assert(tokensOf("cafébar\u00a0x É", ds) === Seq("caf", "bar", "x", "É"))
+    // Ã (C3 83) shares é's lead byte and is not in the set
+    assert(tokensOf("aÃbéc", ds) === Seq("aÃb", "c"))
+  }
+
+  /** The executed word-count plan keeps the property the tokenizer's speed
+    * rests on: no regex, no lambda, and the explode fused into a
+    * whole-stage codegen stage with the scan. */
+  test("wc plan: no split/filter/regex expression, Generate inside WholeStageCodegen") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, StringSplit}
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    val dir = tempDir("planGuard")
+    writeFile(dir, "a.txt", "The quick, brown fox\njumps over the lazy dog")
+    val wc = graft.wc.WordCount.fromText(spark.read.text(dir.toString), "value")
+    assert(wc.collect().length === 8) // an action on wc itself: its final AQE plan
+    val nodes = collectPlanNodes(wc.queryExecution.executedPlan)
+    val banned = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case e: StringSplit => e.nodeName
+      case e: ArrayFilter => e.nodeName
+      case e if e.getClass.getSimpleName.startsWith("RegExp") => e.nodeName
+    }))
+    assert(banned.isEmpty, s"regex/lambda tokenizing in the plan: $banned")
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case q => q +: q.children.flatMap(stage)
+    }
+    val generates = nodes.collect { case g: GenerateExec => g }
+    val fused = nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    assert(generates.nonEmpty, "no Generate in the word-count plan")
+    assert(generates.forall(g => fused.exists(_ eq g)),
+      "the explode runs outside whole-stage codegen")
   }
 }
